@@ -47,18 +47,59 @@ object SparkEntry {
     Tfidf.rankByValue(Tfidf.pipeline(docs), "tfidf", Seq("term", "doc_id"))
   }
 
-  /** One trained ANN index per sf directory, built on first use and
-    * persisted as parquet tables (build-once/query-many): every PQ/IVF
-    * query and recall gate below reads the same index instead of paying
-    * the deterministic training again. Training is deterministic, so a
-    * rebuild would produce bit-identical tables — the cache only saves
-    * time, never changes answers. */
-  private val annIndexCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), operators.ProductQuantization.AnnIndex]()
+  // ---------------------------------------------------------------------------
+  // Stored assets: the shared intermediates every query family reads instead
+  // of recomputing (term counts, pair tables, trained indexes, snapshot
+  // stores). Each is declared ONCE below as a named build; declaring it
+  // registers it, so declaration order is build order — an asset's inputs
+  // must be declared above it (AssetRegistrySpec forces the list in order).
+  // Every build is deterministic, so a rebuild is bit-identical: the memo
+  // saves time, never changes answers.
+  // ---------------------------------------------------------------------------
+
+  /** Every built asset value, keyed by (session, dataset dir, asset name) —
+    * per SparkSession (reference identity) too, so a value bound to a
+    * stopped session is never served to a new session in this JVM. */
+  private val assetMemo =
+    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), Any]()
+
+  private val declaredAssets = scala.collection.mutable.ArrayBuffer[Asset[_]]()
+
+  /** One declared asset: `apply` builds it on first use per
+    * (session, dataset dir) and serves the memoized value after. Built
+    * directly, it lives in memory only (a count, a model blob). */
+  private class Asset[A](val name: String, build: (SparkSession, String) => A)
+      extends ((SparkSession, String) => A) {
+    declaredAssets += this
+
+    def apply(s: SparkSession, dir: String): A = {
+      // values bound to STOPPED sessions are dead weight and would pin the
+      // session's object graph for the JVM lifetime
+      assetMemo.keys.foreach { k => if (k._1.sparkContext.isStopped) assetMemo.remove(k) }
+      assetMemo.getOrElseUpdate((s, dir, name), build(s, dir)).asInstanceOf[A]
+    }
+  }
+
+  /** An asset stored on disk: `write` puts the build under a path,
+    * `read` serves it from there — consumers read the stored tables, which
+    * no cache clear can drop, exactly the layout a production cluster
+    * would read. */
+  private def storedAsset[A](name: String)(write: (SparkSession, String, String) => Unit)(
+      read: (SparkSession, String) => A): Asset[A] =
+    new Asset(name, (s, dir) => read(s, assetPath(s, dir, name)(write(s, dir, _))))
+
+  /** A one-frame stored asset, as parquet. */
+  private def frameAsset(name: String)(
+      build: (SparkSession, String) => DataFrame): Asset[DataFrame] =
+    storedAsset(name) { (s, dir, path) =>
+      val b = build(s, dir)
+      b.write.mode("overwrite").parquet(path)
+      b.unpersist() // builders may return persisted frames; the parquet is the asset
+    }(_.read.parquet(_))
 
   /** Collision-resistant, filesystem-safe key for a dataset dir: SHA-256 hex.
     * (`String.hashCode` is 32-bit and collidable — two dirs could silently
-    * share one index path.) */
+    * share one asset path.) */
   private[graft] def dirDigest(dir: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(32)
@@ -71,47 +112,8 @@ object SparkEntry {
     * directory — rebuild cost over cross-session sharing, correctness
     * over cost. */
   private val jvmNonce = java.util.UUID.randomUUID().toString.take(8)
-  private def sessionScopedPath(s: SparkSession, prefix: String, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"${prefix}_${dirDigest(dir)}_${jvmNonce}_" +
-        java.lang.Integer.toHexString(System.identityHashCode(s))).getAbsolutePath
-
-  /** Drop cache entries bound to STOPPED sessions: their frames are dead
-    * weight and would pin the session's object graph for the JVM lifetime. */
-  private def pruneStopped[K, V](m: scala.collection.concurrent.TrieMap[K, V],
-      session: K => SparkSession): Unit =
-    m.keys.foreach { k => if (session(k).sparkContext.isStopped) m.remove(k) }
-
-  private def annIndex(s: SparkSession, dir: String): operators.ProductQuantization.AnnIndex = {
-    pruneStopped(annIndexCache, (k: (SparkSession, String)) => k._1)
-    // cache keyed per SparkSession (reference identity) too: an index bound
-    // to a stopped session must not be served to a new session in this JVM
-    annIndexCache.getOrElseUpdate((s, dir), {
-      val idxDir = sessionScopedPath(s, "graft_ann_index", dir)
-      // the scope releases the build's internal caches once the index is
-      // on disk — a long-lived session keeps only the parquet asset
-      operators.CacheScope {
-        val built = operators.ProductQuantization.buildIndex(Tables.embeddings(s, dir))
-        operators.ProductQuantization.writeIndex(built, idxDir)
-      }
-      // serve queries from the on-disk tables: immune to cache clears, and
-      // exactly the layout a production cluster would read
-      operators.ProductQuantization.loadIndex(s, idxDir)
-    })
-  }
-
-  /** Text-dedup pipeline assets, mirroring [[annIndex]]: the exact-verifier
-    * pair table, the component labels, and the sketch pair tables are each
-    * built ONCE per (session, sf dir) and persisted as parquet — the
-    * production shape, where a signature/pair table is a stored corpus
-    * asset every downstream consumer reads, not a per-query recomputation
-    * (`dedup_clusters`, `dedup_apply`, and both precision gates previously
-    * re-ran the whole gram pipeline each). Every builder is deterministic,
-    * so a rebuild is bit-identical — the cache saves time, never changes
-    * answers. */
-  private val corpusAssetCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
+  private def sessionTag(s: SparkSession): String =
+    s"${jvmNonce}_" + java.lang.Integer.toHexString(System.identityHashCode(s))
 
   /** Cross-session asset root (env `SPARK_GRAFT_ASSET_DIR`, test-overridable):
     * when set, assets live under it keyed by dataset CONTENT fingerprint
@@ -119,32 +121,20 @@ object SparkEntry {
     * run's deterministic builds (~tens of seconds of tokenize/pair/window
     * work per dataset) instead of rebuilding. Opt-in because sharing trades
     * the nonce's absolute isolation for fingerprint-based staleness
-    * detection: a dataset regenerated IN PLACE with identical file sizes
-    * AND mtimes would wrongly reuse assets — impossible for the driver's
-    * parquet writers (fresh mtimes), but a caller who time-travels mtimes
-    * owns the consequence. */
+    * detection (see [[contentDigest]] for what it can and cannot see). */
   private[graft] var assetRootOverride: Option[String] = None
   private def sharedAssetRoot: Option[String] =
     assetRootOverride.orElse(sys.env.get("SPARK_GRAFT_ASSET_DIR"))
 
   /** Content fingerprint of a dataset dir: SHA-256 over every file's
-    * (relative path, size, mtime), walked in sorted order. O(#files) stat
-    * calls — never reads data bytes, so it stays cheap at any scale.
-    *
-    * Paranoid mode (env `SPARK_GRAFT_ASSET_PARANOID=1`, or the explicit
-    * parameter — tests pass it directly instead of mutating shared state):
-    * additionally hashes each file's first AND last 64 KiB, narrowing the
-    * "regenerated in place with identical sizes AND time-travelled mtimes"
-    * hole the stat-only fingerprint documents. Parquet puts its footer
-    * metadata (row-group offsets, statistics) in the tail, so head+tail
-    * covers both ends where rewrites show; a rewrite differing ONLY in
-    * untouched middle bytes remains invisible — the mode narrows the
-    * hole, it does not close it. Costs two bounded reads per file — still
-    * corpus-size-independent, opt-in because the stat-only mode is
-    * already safe against every writer that doesn't forge mtimes. */
-  private[graft] def contentDigest(dir: String,
-      paranoid: Boolean =
-        sys.env.get("SPARK_GRAFT_ASSET_PARANOID").contains("1")): String = {
+    * (relative path, size, mtime) plus its first AND last 64 KiB, walked
+    * in sorted order. The byte windows see a rewrite in place that keeps
+    * sizes and forges mtimes; parquet puts its footer metadata (row-group
+    * offsets, statistics) in the tail, so head+tail covers both ends where
+    * rewrites show. A rewrite differing ONLY in untouched middle bytes
+    * remains invisible. Costs two bounded reads per file — independent of
+    * corpus size — and runs only when a shared asset root is set. */
+  private[graft] def contentDigest(dir: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val root = new java.io.File(dir)
     def walk(f: java.io.File): Unit =
@@ -152,32 +142,30 @@ object SparkEntry {
       else {
         md.update(
           s"${root.toPath.relativize(f.toPath)}|${f.length}|${f.lastModified}\n".getBytes("UTF-8"))
-        if (paranoid) {
-          val in = new java.io.RandomAccessFile(f, "r")
-          try {
-            // readNBytes-style full loops — a single read() may legally
-            // return a short chunk (NFS/fuse), which would make the digest
-            // depend on I/O chunking instead of file content
-            def readFully(at: Long, n: Int): Array[Byte] = {
-              in.seek(at)
-              val buf = new Array[Byte](n)
-              var off = 0
-              var r = 0
-              while (off < n && r >= 0) {
-                r = in.read(buf, off, n - off)
-                if (r > 0) off += r
-              }
-              if (off == n) buf else java.util.Arrays.copyOf(buf, off)
+        val in = new java.io.RandomAccessFile(f, "r")
+        try {
+          // readNBytes-style full loops — a single read() may legally
+          // return a short chunk (NFS/fuse), which would make the digest
+          // depend on I/O chunking instead of file content
+          def readFully(at: Long, n: Int): Array[Byte] = {
+            in.seek(at)
+            val buf = new Array[Byte](n)
+            var off = 0
+            var r = 0
+            while (off < n && r >= 0) {
+              r = in.read(buf, off, n - off)
+              if (r > 0) off += r
             }
-            val len = in.length()
-            val head = math.min(len, 65536L).toInt
-            md.update(readFully(0L, head))
-            // tail window, skipping any bytes the head already covered
-            val tailStart = math.max(head.toLong, len - 65536L)
-            if (tailStart < len)
-              md.update(readFully(tailStart, (len - tailStart).toInt))
-          } finally in.close()
-        }
+            if (off == n) buf else java.util.Arrays.copyOf(buf, off)
+          }
+          val len = in.length()
+          val head = math.min(len, 65536L).toInt
+          md.update(readFully(0L, head))
+          // tail window, skipping any bytes the head already covered
+          val tailStart = math.max(head.toLong, len - 65536L)
+          if (tailStart < len)
+            md.update(readFully(tailStart, (len - tailStart).toInt))
+        } finally in.close()
       }
     walk(root)
     md.digest().map("%02x".format(_)).mkString.take(32)
@@ -188,64 +176,65 @@ object SparkEntry {
     f.delete()
   }
 
-  private def corpusAsset(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    pruneStopped(corpusAssetCache, (k: (SparkSession, String, String)) => k._1)
-    pruneStopped(docsCountCache, (k: (SparkSession, String)) => k._1)
-    corpusAssetCache.getOrElseUpdate((s, dir, kind), {
-      val path = sharedAssetRoot match {
-        case Some(rootDir) =>
-          val target = new java.io.File(rootDir, s"graft_asset_${kind}_${contentDigest(dir)}")
-          // _SUCCESS is parquet's own completion marker: present iff a
-          // writer finished. Writers build into a private temp dir and
-          // RENAME into place — atomic on one filesystem, and the rename
-          // fails (instead of merging) if a concurrent writer won.
-          if (new java.io.File(target, "_SUCCESS").exists()) target.getAbsolutePath
-          else {
-            val tmp = new java.io.File(rootDir,
-              s"${target.getName}.build_${jvmNonce}_" +
-                java.lang.Integer.toHexString(System.identityHashCode(s)))
-            operators.CacheScope {
-              val b = build
-              b.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-              b.unpersist()
-            }
-            if (tmp.renameTo(target)) target.getAbsolutePath
-            else if (new java.io.File(target, "_SUCCESS").exists()) {
-              // lost the race — the winner's asset is bit-identical
-              // (deterministic builders), serve it
-              deleteRecursively(tmp)
-              target.getAbsolutePath
-            } else
-              // target occupied but incomplete (foreign partial dir):
-              // serve our finished build from the temp path, don't guess
-              tmp.getAbsolutePath
-          }
-        case None =>
-          val p = sessionScopedPath(s, s"graft_asset_$kind", dir)
-          // the scope releases every builder-internal cache (gram rows, LSH
-          // signatures, iteration frames) once the asset is on disk
-          operators.CacheScope {
-            val b = build
-            b.write.mode("overwrite").parquet(p)
-            b.unpersist() // builders may return persisted frames; the parquet is the asset
-          }
-          p
-      }
-      s.read.parquet(path)
-    })
+  /** The directory stored asset `name` of `dir` lives in, running `write`
+    * into it first unless a finished copy is already there. `_SUCCESS`
+    * (parquet's own completion marker, touched here for multi-table
+    * assets too) is present iff a writer finished. */
+  private def assetPath(s: SparkSession, dir: String, name: String)(
+      write: String => Unit): String = {
+    def finished(f: java.io.File) = new java.io.File(f, "_SUCCESS").exists()
+    def writeTo(f: java.io.File): java.io.File = {
+      // the scope releases every builder-internal cache (gram rows, LSH
+      // signatures, iteration frames) once the asset is on disk
+      operators.CacheScope { write(f.getAbsolutePath) }
+      new java.io.File(f, "_SUCCESS").createNewFile()
+      f
+    }
+    val stored = sharedAssetRoot match {
+      case Some(rootDir) =>
+        val target = new java.io.File(rootDir, s"graft_asset_${name}_${contentDigest(dir)}")
+        if (finished(target)) target
+        else {
+          // writers build into a private temp dir and RENAME into place —
+          // atomic on one filesystem, and the rename fails (instead of
+          // merging) if a concurrent writer won
+          val tmp = writeTo(
+            new java.io.File(rootDir, s"${target.getName}.build_${sessionTag(s)}"))
+          if (tmp.renameTo(target)) target
+          else if (finished(target)) {
+            // lost the race — the winner's asset is bit-identical
+            // (deterministic builders), serve it
+            deleteRecursively(tmp)
+            target
+          } else
+            // target occupied but incomplete (foreign partial dir):
+            // serve our finished build from the temp path, don't guess
+            tmp
+        }
+      case None =>
+        writeTo(new java.io.File(sys.props("java.io.tmpdir"),
+          s"graft_asset_${name}_${dirDigest(dir)}_${sessionTag(s)}"))
+    }
+    stored.getAbsolutePath
   }
 
-  /** Test hook: forget every cached asset/index/count so the next access
-    * rebuilds from scratch (determinism suites re-run queries under varied
-    * physical layouts and must not read a previous layout's materialized
-    * asset). */
-  private[graft] def clearAssetCaches(): Unit = {
-    corpusAssetCache.clear()
-    annIndexCache.clear()
-    docsCountCache.clear()
-    servedPostingsCache.clear()
-  }
+  /** Test hook: forget every built asset so the next access rebuilds from
+    * scratch (determinism suites re-run queries under varied physical
+    * layouts and must not read a previous layout's materialized asset). */
+  private[graft] def clearAssetCaches(): Unit = assetMemo.clear()
+
+  /** Test hook: the memo's current keys. */
+  private[graft] def memoizedAssets: Set[(SparkSession, String, String)] = assetMemo.keySet.toSet
+
+  /** Every declared asset in build order, by name. The bench harness forces
+    * each build ONCE up front and times it under a separate `assets` key,
+    * so per-query timings are SERVING-ONLY (r6: `bigram_pmi`'s 45 s cold
+    * was the token-array + bigram-counts builds landing on whichever query
+    * ran first, masking real serving regressions). Forcing an asset twice
+    * is idempotent, so an entry whose inputs were forced before it times
+    * its own build only. */
+  private[graft] def assetBuilders: Seq[(String, (SparkSession, String) => Unit)] =
+    declaredAssets.toSeq.map(a => a.name -> ((s: SparkSession, d: String) => { a(s, d); () }))
 
   /** Token-position corpus asset `(doc_id, tokens: array<string>)` — the
     * portable token stream, tokenized ONCE per (session, dir) and stored
@@ -254,10 +243,9 @@ object SparkEntry {
     * the regex-heavy tokenize; the array layout (vs a flat
     * `(doc_id, pos, term)` table) keeps window/adjacency building per-row
     * map work with no per-doc reassembly shuffle. */
-  private def tokenArraysAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "token_arrays") {
-      Tfidf.tokenArrays(Tables.documents(s, dir))
-    }
+  private val tokenArraysAsset = frameAsset("token_arrays") { (s, dir) =>
+    Tfidf.tokenArrays(Tables.documents(s, dir))
+  }
 
   /** Materialized portable term-counts table `(term, doc_id, cnt)` — the
     * intermediate every TF-IDF-family query aggregates from; derived from
@@ -265,18 +253,15 @@ object SparkEntry {
     * token stream), so the corpus tokenizes ONCE per (session, dir) across
     * the whole counts/windows/adjacency family; scoring math is unchanged
     * (the counts are deterministic). */
-  private def termCountsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "term_counts") {
-      Tfidf.termCounts(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .select(col("doc_id"), explode(col("tokens")).as("term")))
-    }
+  private val termCountsAsset = frameAsset("term_counts") { (s, dir) =>
+    Tfidf.termCounts(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .select(col("doc_id"), explode(col("tokens")).as("term")))
+  }
 
   /** Corpus cardinality (N in every idf): one count per (session, dir). */
-  private val docsCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-  private def docsCount(s: SparkSession, dir: String): Long =
-    docsCountCache.getOrElseUpdate((s, dir), Tables.documents(s, dir).count())
+  private val docsCount =
+    new Asset[Long]("docs_count", (s, dir) => Tables.documents(s, dir).count())
 
   /** Exact n-gram pair table at the LOOSEST consumed bar (0.2 — the
     * precision gates' loose slice); tighter consumers filter `jaccard`. */
@@ -326,41 +311,35 @@ object SparkEntry {
     * full lineitem scan per execution — the rollup is a classic stored
     * materialization (one spelling, [[Relational.unitPricePairs]];
     * exact-valued, so serving from parquet changes nothing). */
-  private def unitPricePairsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "unit_price_pairs") {
-      Relational.unitPricePairs(s, dir)
-    }
+  private val unitPricePairsAsset = frameAsset("unit_price_pairs") { (s, dir) =>
+    Relational.unitPricePairs(s, dir)
+  }
 
-  private def exactPairsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "ngram_pairs") {
-      Dedup.ngramJaccardExact(Tables.documents(s, dir), minJaccard = 0.2)
-    }
+  private val exactPairsAsset = frameAsset("ngram_pairs") { (s, dir) =>
+    Dedup.ngramJaccardExact(Tables.documents(s, dir), minJaccard = 0.2)
+  }
 
-  private def dedupLabelsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "dedup_labels") {
-      Dedup.connectedComponents(
-        exactPairsAsset(s, dir).where(col("jaccard") >= 0.5)
-          .select("doc_a", "doc_b"))
-    }
+  private val dedupLabelsAsset = frameAsset("dedup_labels") { (s, dir) =>
+    Dedup.connectedComponents(
+      exactPairsAsset(s, dir).where(col("jaccard") >= 0.5)
+        .select("doc_a", "doc_b"))
+  }
 
-  private def minhashPairsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "minhash_pairs") {
-      Dedup.minhashPairs(Tables.documents(s, dir), threshold = 0.5)
-    }
+  private val minhashPairsAsset = frameAsset("minhash_pairs") { (s, dir) =>
+    Dedup.minhashPairs(Tables.documents(s, dir), threshold = 0.5)
+  }
 
-  private def simhashPairsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "simhash_pairs") {
-      Dedup.simhashPairs(Tables.documents(s, dir))
-    }
+  private val simhashPairsAsset = frameAsset("simhash_pairs") { (s, dir) =>
+    Dedup.simhashPairs(Tables.documents(s, dir))
+  }
 
   /** Learned BPE merge table (8 rules over the term-counts vocabulary) —
     * a trained tokenizer model, persisted like the ANN index so the
     * training loop runs once per (session, dataset) and both the merge
     * query and the segmenter read the same artifact. */
-  private def bpeMergesAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bpe_merges") {
-      TextAnalysis.bpeTrainMergesFromCounts(termCountsAsset(s, dir), nMerges = 8)
-    }
+  private val bpeMergesAsset = frameAsset("bpe_merges") { (s, dir) =>
+    TextAnalysis.bpeTrainMergesFromCounts(termCountsAsset(s, dir), nMerges = 8)
+  }
 
   /** Trained quality-classifier model (9 rows: intercept + per-feature
     * weight/mean/std) — the fastText-shaped distillation artifact,
@@ -368,16 +347,15 @@ object SparkEntry {
     * runs once per (session, dataset) and every scoring query reads the
     * same weights. Bit-deterministic across layouts (decimal-routed
     * gradients; [[operators.QualityClassifier.layoutDeterminismGate]]). */
-  private def qualityClassifierWeightsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "quality_classifier_weights") {
-      // fanOut: the surface-stat scan (the build's dominant cost) is
-      // regex-heavy per-row map work over the single-row-group fixture
-      // scan; weights are layout-invariant by the decimal-routed design
-      // (pinned by layout_determinism_gate)
-      val model = operators.QualityClassifier.fit(
-        operators.QualityClassifier.featureFrame(documentsFan(s, dir)))
-      operators.QualityClassifier.weightsDf(s, model)
-    }
+  private val qualityClassifierWeightsAsset = frameAsset("quality_classifier_weights") { (s, dir) =>
+    // fanOut: the surface-stat scan (the build's dominant cost) is
+    // regex-heavy per-row map work over the single-row-group fixture
+    // scan; weights are layout-invariant by the decimal-routed design
+    // (pinned by layout_determinism_gate)
+    val model = operators.QualityClassifier.fit(
+      operators.QualityClassifier.featureFrame(documentsFan(s, dir)))
+    operators.QualityClassifier.weightsDf(s, model)
+  }
 
   /** BM25 score table `(term, doc_id, cnt, doc_total, df, idf_bm25,
     * score)` as a corpus asset — the INVERTED INDEX a retrieval stack
@@ -386,10 +364,9 @@ object SparkEntry {
     * instead of re-scoring the corpus (the avgdl head action and two
     * aggregate joins happen once per dataset). Deterministic (9-rounded
     * doubles round-trip parquet exactly), so values are unchanged. */
-  private def bm25Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bm25_scores") {
-      Tfidf.bm25FromCounts(termCountsAsset(s, dir), docsCount(s, dir))
-    }
+  private val bm25Asset = frameAsset("bm25_scores") { (s, dir) =>
+    Tfidf.bm25FromCounts(termCountsAsset(s, dir), docsCount(s, dir))
+  }
 
   /** The SERVED form of the BM25 postings index: the asset's narrow
     * (term, doc_id, score) projection, spread round-robin across the full
@@ -403,24 +380,25 @@ object SparkEntry {
     * not term-keyed: consumers broadcast their keyword side, so any
     * posting row can process anywhere; term-keyed spreading funnels work
     * through the few distinct high-tfidf terms. */
-  private val servedPostingsCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private[graft] def bm25ServedPostings(s: SparkSession, dir: String): DataFrame = {
-    pruneStopped(servedPostingsCache, (k: (SparkSession, String)) => k._1)
-    val df = servedPostingsCache.getOrElseUpdate((s, dir), {
+  private val servedPostingsAsset: Asset[DataFrame] =
+    new Asset[DataFrame]("bm25_served_postings", (s, dir) =>
       bm25Asset(s, dir).select("term", "doc_id", "score")
-        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    })
-    // A harness clearCache() between queries drops the blocks out from
-    // under the cached frame; re-pin and re-materialize whenever that
-    // happened, so consumers ALWAYS read pre-spread cached blocks (one
-    // shuffle per pin, zero per serving query).
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
+        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)) {
+      // A harness clearCache() between queries drops the blocks out from
+      // under the cached frame; re-pin and re-materialize whenever that
+      // happened, so consumers ALWAYS read pre-spread cached blocks (one
+      // shuffle per pin, zero per serving query).
+      override def apply(s: SparkSession, dir: String): DataFrame = {
+        val df = super.apply(s, dir)
+        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          df.count()
+        }
+        df
+      }
     }
-    df
-  }
+  private[graft] def bm25ServedPostings(s: SparkSession, dir: String): DataFrame =
+    servedPostingsAsset(s, dir)
 
   /** Exact brute-force kNN ground truth for the standard gate probe set
     * (queries 0-9, k=10) as a corpus asset: five recall gates (`ann_recall`,
@@ -428,10 +406,9 @@ object SparkEntry {
     * re-ran the identical deterministic brute-force pass per execution
     * before this existed. Ground truth is a stored eval artifact — the
     * production shape for any recall harness. */
-  private def knnExactAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "knn_exact_q10k10") {
-      Similarity.knnBruteForce(Tables.embeddings(s, dir), 0L to 9L, 10)
-    }
+  private val knnExactAsset = frameAsset("knn_exact") { (s, dir) =>
+    Similarity.knnBruteForce(Tables.embeddings(s, dir), 0L to 9L, 10)
+  }
 
   /** One-Lloyd-iteration IVF coarse centroids as a corpus asset — centroid
     * training is model fitting (the argument that already asset-backed the
@@ -439,74 +416,67 @@ object SparkEntry {
     * re-paid on every execution before this existed (r6: `ivf_lloyd_top10`
     * warm 1.9 s, mostly re-training). The search query reads 16 stored
     * (c_id, cv, cnorm) rows instead. */
-  private def lloydCentroidsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "ivf_lloyd_cents") {
-      Similarity.trainCentroidsFromEmbeddings(
-        Tables.embeddings(s, dir), nCentroids = 16, lloydIters = 1)
-    }
+  private val lloydCentroidsAsset = frameAsset("ivf_lloyd_cents") { (s, dir) =>
+    Similarity.trainCentroidsFromEmbeddings(
+      Tables.embeddings(s, dir), nCentroids = 16, lloydIters = 1)
+  }
 
   /** Corpus adjacent-bigram counts `(w1, w2, n_ab)` — the shared LM/
     * collocation model table; `bigram_pmi` and `lm_doc_scores` both
     * aggregated it from the token arrays per execution before it became an
     * asset (r5 VERDICT item 5). */
-  private def bigramCountsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bigram_counts") {
-      TextAnalysis.bigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)))
-    }
+  private val bigramCountsAsset = frameAsset("bigram_counts") { (s, dir) =>
+    TextAnalysis.bigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)))
+  }
 
   /** Corpus adjacent-trigram counts `(w1, w2, w3, n_abc)` — the one model
     * table every trigram-KN statistic aggregates from. */
-  private def trigramCountsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "trigram_counts") {
-      TextAnalysis.trigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)))
-    }
+  private val trigramCountsAsset = frameAsset("trigram_counts") { (s, dir) =>
+    TextAnalysis.trigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)))
+  }
 
   /** Pre-enriched KN3 model (one row per trigram type, every scoring
     * statistic inline + the type/vocab scalars) — corpus-trained KN3
     * serving joins this ONCE instead of running five stat joins per
     * query execution. */
-  private def kn3ModelAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "kn3_model") {
-      TextAnalysis.kn3EnrichedModel(trigramCountsAsset(s, dir),
-        termCountsAsset(s, dir))
-    }
+  private val kn3ModelAsset = frameAsset("kn3_model") { (s, dir) =>
+    TextAnalysis.kn3EnrichedModel(trigramCountsAsset(s, dir),
+      termCountsAsset(s, dir))
+  }
 
   /** Pre-enriched bigram-KN model — the kn3_model's bigram twin: one row
     * per bigram type with all three statistics inline, so corpus-trained
     * KN2 serving is ONE join per query instead of three stat aggregates
     * + joins per execution. */
-  private def kn2ModelAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "kn2_model") {
-      TextAnalysis.kn2EnrichedModel(bigramCountsAsset(s, dir))
-    }
+  private val kn2ModelAsset = frameAsset("kn2_model") { (s, dir) =>
+    TextAnalysis.kn2EnrichedModel(bigramCountsAsset(s, dir))
+  }
 
   /** Per-doc perplexity-contrast scores (Moore–Lewis delta vs the
     * held-out target split) — the fused two-model scoring pass runs once
     * per dataset; the score query and both selection heads serve from the
     * parquet (the bm25/term-counts serving pattern). */
-  private def contrastScoresAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "contrast_scores") {
-      val toksAll = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-      TextAnalysis.perplexityContrastKn3(toksAll,
-        TextAnalysis.trigramCountsFromTokens(
-          toksAll.where(col("doc_id") % 53 === 0)),
-        termCountsAsset(s, dir).where(col("doc_id") % 53 === 0),
-        kn3ModelAsset(s, dir))
-    }
+  private val contrastScoresAsset = frameAsset("contrast_scores") { (s, dir) =>
+    val toksAll = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+    TextAnalysis.perplexityContrastKn3(toksAll,
+      TextAnalysis.trigramCountsFromTokens(
+        toksAll.where(col("doc_id") % 53 === 0)),
+      termCountsAsset(s, dir).where(col("doc_id") % 53 === 0),
+      kn3ModelAsset(s, dir))
+  }
 
   /** Trigram counts over the pre-append corpus slice (doc_id % 10 ≠ 9) —
     * the STORED general-model snapshot the contrast-score snapshot
     * protocol serves from: batch scoring aggregates its per-order
     * statistics from this narrow model table (model-sized work), never
     * from a corpus rescan. */
-  private def trigramCountsOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "trigram_counts_old90") {
-      TextAnalysis.trigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") % 10 =!= 9))
-    }
+  private val trigramCountsOld90Asset = frameAsset("trigram_counts_old90") { (s, dir) =>
+    TextAnalysis.trigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") % 10 =!= 9))
+  }
 
   /** The old90 GENERAL model's KN3 statistic tables, stored (r16): the
     * held-out contrast scorers re-aggregated these five model-sized
@@ -517,69 +487,65 @@ object SparkEntry {
     * ([[graft.operators.TextAnalysis.perplexityContrastKn3HeldoutServed]]).
     * All-integral values: the parquet round-trip is bit-identical to the
     * live aggregation (spec-pinned in TextAnalysisSpec). */
-  private def storedKn3Stats(s: SparkSession, dir: String, prefix: String,
-      live: => TextAnalysis.Kn3Stats): TextAnalysis.Kn3Stats = {
-    lazy val l = live
-    TextAnalysis.Kn3Stats(
-      ctx = corpusAsset(s, dir, s"${prefix}_ctx")(l.ctx),
-      cont2 = corpusAsset(s, dir, s"${prefix}_cont2")(l.cont2),
-      mid = corpusAsset(s, dir, s"${prefix}_mid")(l.mid),
-      cont1 = corpusAsset(s, dir, s"${prefix}_cont1")(l.cont1),
-      types = corpusAsset(s, dir, s"${prefix}_types")(l.types),
-      vocab = corpusAsset(s, dir, s"${prefix}_vocab")(l.vocab))
-  }
+  private def kn3StatsAsset(name: String)(
+      live: (SparkSession, String) => TextAnalysis.Kn3Stats): Asset[TextAnalysis.Kn3Stats] =
+    storedAsset(name) { (s, dir, path) =>
+      val l = live(s, dir)
+      Seq("ctx" -> l.ctx, "cont2" -> l.cont2, "mid" -> l.mid, "cont1" -> l.cont1,
+        "types" -> l.types, "vocab" -> l.vocab)
+        .foreach { case (t, df) => df.write.mode("overwrite").parquet(s"$path/$t") }
+    } { (s, path) =>
+      def t(table: String) = s.read.parquet(s"$path/$table")
+      TextAnalysis.Kn3Stats(t("ctx"), t("cont2"), t("mid"), t("cont1"), t("types"), t("vocab"))
+    }
 
-  private def kn3StatsOld90(s: SparkSession, dir: String): TextAnalysis.Kn3Stats =
-    storedKn3Stats(s, dir, "kn3_stats_old90",
-      TextAnalysis.kn3Stats(trigramCountsOld90Asset(s, dir),
-        termCountsAsset(s, dir).where(col("doc_id") % 10 =!= 9)))
+  private val kn3StatsOld90 = kn3StatsAsset("kn3_stats_old90") { (s, dir) =>
+    TextAnalysis.kn3Stats(trigramCountsOld90Asset(s, dir),
+      termCountsAsset(s, dir).where(col("doc_id") % 10 =!= 9))
+  }
 
   /** The IN-DOMAIN model of the old90 contrast snapshot — the fixed
     * curated split (old90 ∩ %53): its trigram counts and statistic
     * tables, stored. The snapshot's in-domain side is as frozen as its
     * general side, so batch scoring re-derived BOTH per execution
     * (tokenize slice + trigram count + five aggregates) for nothing. */
-  private def trigramCountsInOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "trigram_counts_in_old90") {
-      TextAnalysis.trigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") % 10 =!= 9 && col("doc_id") % 53 === 0))
-    }
+  private val trigramCountsInOld90Asset = frameAsset("trigram_counts_in_old90") { (s, dir) =>
+    TextAnalysis.trigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") % 10 =!= 9 && col("doc_id") % 53 === 0))
+  }
 
-  private def kn3StatsInOld90(s: SparkSession, dir: String): TextAnalysis.Kn3Stats =
-    storedKn3Stats(s, dir, "kn3_stats_in_old90",
-      TextAnalysis.kn3Stats(trigramCountsInOld90Asset(s, dir),
-        termCountsAsset(s, dir)
-          .where(col("doc_id") % 10 =!= 9 && col("doc_id") % 53 === 0)))
+  private val kn3StatsInOld90 = kn3StatsAsset("kn3_stats_in_old90") { (s, dir) =>
+    TextAnalysis.kn3Stats(trigramCountsInOld90Asset(s, dir),
+      termCountsAsset(s, dir)
+        .where(col("doc_id") % 10 =!= 9 && col("doc_id") % 53 === 0))
+  }
 
   /** Bigram counts over the same pre-append slice — the stored bigram
     * model the count-merge replay updates. */
-  private def bigramCountsOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bigram_counts_old90") {
-      TextAnalysis.bigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") % 10 =!= 9))
-    }
+  private val bigramCountsOld90Asset = frameAsset("bigram_counts_old90") { (s, dir) =>
+    TextAnalysis.bigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") % 10 =!= 9))
+  }
 
   /** Trigram counts over the rebuild-audit shard's pre-append slice
     * (doc_id < [[rebuildAuditMaxDoc]], doc_id % 10 ≠ 9) — stored so the
     * enrichment-pricing gates read a model-sized parquet instead of
     * recounting the shard's tokens on every run (r13: that recount was
     * the registry's #3 quiet-box cost despite the constant-shard bound). */
-  private def trigramCountsAuditOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "trigram_counts_audit_old") {
-      TextAnalysis.trigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
-    }
+  private val trigramCountsAuditOldAsset = frameAsset("trigram_counts_audit_old") { (s, dir) =>
+    TextAnalysis.trigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
+  }
 
   /** Bigram twin of [[trigramCountsAuditOldAsset]]. */
-  private def bigramCountsAuditOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bigram_counts_audit_old") {
-      TextAnalysis.bigramCountsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
-    }
+  private val bigramCountsAuditOldAsset = frameAsset("bigram_counts_audit_old") { (s, dir) =>
+    TextAnalysis.bigramCountsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
+  }
 
   /** ENRICHED KN3 model over the audit shard's pre-append slice — the
     * stored serving artifact the kn3 rebuild gate delta-merges (r15):
@@ -588,18 +554,16 @@ object SparkEntry {
     * full enrichment re-aggregation per run. Built from the stored audit
     * counts + the old-slice term vocabulary, so the merged output's
     * scalars line up with the full-shard enrichment the oracle replays. */
-  private def kn3ModelAuditOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "kn3_model_audit_old") {
-      TextAnalysis.kn3EnrichedModel(trigramCountsAuditOldAsset(s, dir),
-        termCountsAsset(s, dir)
-          .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
-    }
+  private val kn3ModelAuditOldAsset = frameAsset("kn3_model_audit_old") { (s, dir) =>
+    TextAnalysis.kn3EnrichedModel(trigramCountsAuditOldAsset(s, dir),
+      termCountsAsset(s, dir)
+        .where(col("doc_id") < rebuildAuditMaxDoc && col("doc_id") % 10 =!= 9))
+  }
 
   /** Bigram twin of [[kn3ModelAuditOldAsset]]. */
-  private def kn2ModelAuditOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "kn2_model_audit_old") {
-      TextAnalysis.kn2EnrichedModel(bigramCountsAuditOldAsset(s, dir))
-    }
+  private val kn2ModelAuditOldAsset = frameAsset("kn2_model_audit_old") { (s, dir) =>
+    TextAnalysis.kn2EnrichedModel(bigramCountsAuditOldAsset(s, dir))
+  }
 
   /** Pre-append contrast scores — the stored snapshot-scored asset the
     * incremental replay unions with the batch's fresh scores: every old
@@ -608,35 +572,32 @@ object SparkEntry {
     * trigram snapshot) and never re-scored until a snapshot rebuild.
     * Both ladders run held-out form so the stored scores and any later
     * batch's scores come from ONE spelling. */
-  private def contrastScoresOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "contrast_scores_old90") {
-      val toksOld = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-        .where(col("doc_id") % 10 =!= 9)
-      TextAnalysis.perplexityContrastKn3HeldoutServed(toksOld,
-        trigramCountsInOld90Asset(s, dir), kn3StatsInOld90(s, dir),
-        trigramCountsOld90Asset(s, dir), kn3StatsOld90(s, dir))
-    }
+  private val contrastScoresOld90Asset = frameAsset("contrast_scores_old90") { (s, dir) =>
+    val toksOld = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+      .where(col("doc_id") % 10 =!= 9)
+    TextAnalysis.perplexityContrastKn3HeldoutServed(toksOld,
+      trigramCountsInOld90Asset(s, dir), kn3StatsInOld90(s, dir),
+      trigramCountsOld90Asset(s, dir), kn3StatsOld90(s, dir))
+  }
 
   /** The paragraph keeper store over the pre-append corpus slice
     * (doc_id % 10 ≠ 9 — the same replay split every incremental index
     * uses): "the stored paragraph index before the batch arrived". */
-  private def paragraphKeepersOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "paragraph_keepers_old90") {
-      Paragraphs.paragraphKeepers(
-        Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9),
-        paraTokens = 16)
-    }
+  private val paragraphKeepersOldAsset = frameAsset("paragraph_keepers_old90") { (s, dir) =>
+    Paragraphs.paragraphKeepers(
+      Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9),
+      paraTokens = 16)
+  }
 
   /** The DELIMITER-cut keeper store over the same pre-append slice — the
     * real-boundary sibling of `paragraph_keepers_old90` (real corpora cut
     * on `\n{2,}`; the single-line fixture's stand-in separator is the
     * registry's usual ` table ` word). */
-  private def paragraphKeepersDelimOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "paragraph_keepers_delim_old90") {
-      Paragraphs.paragraphKeepersByDelimiter(
-        Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9),
-        "\\s+table\\s+")
-    }
+  private val paragraphKeepersDelimOldAsset = frameAsset("paragraph_keepers_delim_old90") { (s, dir) =>
+    Paragraphs.paragraphKeepersByDelimiter(
+      Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9),
+      "\\s+table\\s+")
+  }
 
   /** Arrival split for the manifest-maintenance family: BLOCKS of 20
     * consecutive doc_ids arrive together — `(doc_id div 20) % 10 == 9` is
@@ -667,81 +628,73 @@ object SparkEntry {
   /** Stored fingerprint keepers over the pre-append slice — the exact-dup
     * store the incremental manifest probes (FIRST-ARRIVED: keeper = the
     * earliest old arrival per content fingerprint). */
-  private def fpStoreOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "fp_store_old90") {
-      oldSliceDocs(s, dir)
-        .select(graft.functions.TextFunctions.contentFingerprint(col("text"))
-          .as("fingerprint"), col("doc_id"))
-        .groupBy("fingerprint").agg(min("doc_id").as("keeper"))
-    }
+  private val fpStoreOldAsset = frameAsset("fp_store_old90") { (s, dir) =>
+    oldSliceDocs(s, dir)
+      .select(graft.functions.TextFunctions.contentFingerprint(col("text"))
+        .as("fingerprint"), col("doc_id"))
+      .groupBy("fingerprint").agg(min("doc_id").as("keeper"))
+  }
 
   /** The near-dup snapshot index, four stored tables
     * ([[Dedup.nearDupFlagsIncremental]]'s contract): gram document
     * frequencies over the old slice (UNCAPPED — merged-df arithmetic
     * needs every old count), the old-df-capped postings, per-doc kept
     * sizes, and the stored pair-table closure. */
-  private def dedupGramDfOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "dedup_gram_df_old90") {
-      Dedup.distinctGramRows(oldSliceDocs(s, dir))
-        .groupBy("gram").agg(count(lit(1)).as("gram_df"))
-    }
+  private val dedupGramDfOldAsset = frameAsset("dedup_gram_df_old90") { (s, dir) =>
+    Dedup.distinctGramRows(oldSliceDocs(s, dir))
+      .groupBy("gram").agg(count(lit(1)).as("gram_df"))
+  }
 
-  private def dedupPostingsOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "dedup_postings_old90") {
-      Dedup.distinctGramRows(oldSliceDocs(s, dir))
-        .join(dedupGramDfOldAsset(s, dir)
-          .where(col("gram_df") <= 64).select("gram"), "gram")
-        .select("doc_id", "gram")
-    }
+  private val dedupPostingsOldAsset = frameAsset("dedup_postings_old90") { (s, dir) =>
+    Dedup.distinctGramRows(oldSliceDocs(s, dir))
+      .join(dedupGramDfOldAsset(s, dir)
+        .where(col("gram_df") <= 64).select("gram"), "gram")
+      .select("doc_id", "gram")
+  }
 
-  private def dedupSizesOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "dedup_sizes_old90") {
-      dedupPostingsOldAsset(s, dir)
-        .groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    }
+  private val dedupSizesOldAsset = frameAsset("dedup_sizes_old90") { (s, dir) =>
+    dedupPostingsOldAsset(s, dir)
+      .groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
+  }
 
-  private def dedupLabelsOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "dedup_labels_old90") {
-      // pair stage over the STORED kept postings + sizes (built from the
-      // same distinctGramRows spelling under the same df cap), not a
-      // second tokenize + gram-df aggregation over the old slice —
-      // row-identical by the shared-gram-domain contract
-      // ([[Dedup.ngramJaccardFromPostings]]); sf0.1 build 16.5 → ~9 s
-      Dedup.connectedComponents(
-        Dedup.ngramJaccardFromPostings(dedupPostingsOldAsset(s, dir),
-          dedupSizesOldAsset(s, dir)).select("doc_a", "doc_b"))
-    }
+  private val dedupLabelsOldAsset = frameAsset("dedup_labels_old90") { (s, dir) =>
+    // pair stage over the STORED kept postings + sizes (built from the
+    // same distinctGramRows spelling under the same df cap), not a
+    // second tokenize + gram-df aggregation over the old slice —
+    // row-identical by the shared-gram-domain contract
+    // ([[Dedup.ngramJaccardFromPostings]]); sf0.1 build 16.5 → ~9 s
+    Dedup.connectedComponents(
+      Dedup.ngramJaccardFromPostings(dedupPostingsOldAsset(s, dir),
+        dedupSizesOldAsset(s, dir)).select("doc_a", "doc_b"))
+  }
 
   /** Stored benchmark gram set over the old slice's benchmark split — the
     * decontamination store an append batch unions its own new benchmark
     * grams into before scoring arriving train documents. */
-  private def benchGramsOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bench_grams_old90") {
-      Curation.gramRowsFromTokens(
-          operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-            .where(manifestArrivalBlock =!= 9 && col("doc_id") % 53 === 0), 3)
-        .select("gram").distinct()
-    }
+  private val benchGramsOldAsset = frameAsset("bench_grams_old90") { (s, dir) =>
+    Curation.gramRowsFromTokens(
+        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+          .where(manifestArrivalBlock =!= 9 && col("doc_id") % 53 === 0), 3)
+      .select("gram").distinct()
+  }
 
   /** Stored per-source quality thresholds over the old slice — the
     * sampled-cut calibration ([[TextAnalysis.qualityThresholds]]) the
     * incremental manifest's quality stage compares against. */
-  private def qualityThresholdsOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "quality_thresholds_old90") {
-      TextAnalysis.qualityThresholds(oldSliceDocs(s, dir), dropFraction = 0.25)
-    }
+  private val qualityThresholdsOldAsset = frameAsset("quality_thresholds_old90") { (s, dir) =>
+    TextAnalysis.qualityThresholds(oldSliceDocs(s, dir), dropFraction = 0.25)
+  }
 
   /** The conservative recipe's weight table as a stored artifact — a
     * pipeline materializes the composed weights once (the pair stage over
     * the cleaned text is derivation work, not serving work); the weights
     * query and the applied sampler both read the parquet. */
-  private def conservativeWeightsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "conservative_weights") {
-      // fanOut: stage 1 (within-doc strip) is per-row text work over the
-      // single-row-group scan; the cleaned frame inherits the parallelism
-      // into the pair stage's tokenize. Layout-invariant results.
-      Curation.conservativeSoftWeights(documentsFan(s, dir), paraTokens = 2)
-    }
+  private val conservativeWeightsAsset = frameAsset("conservative_weights") { (s, dir) =>
+    // fanOut: stage 1 (within-doc strip) is per-row text work over the
+    // single-row-group scan; the cleaned frame inherits the parallelism
+    // into the pair stage's tokenize. Layout-invariant results.
+    Curation.conservativeSoftWeights(documentsFan(s, dir), paraTokens = 2)
+  }
 
   /** The snapshot's OWN manifest over the pre-append slice — the stored
     * dataset-card rows an append batch's incremental rows union with.
@@ -751,44 +704,43 @@ object SparkEntry {
     * batch rows carry one consistent semantics; rows are IMMUTABLE —
     * a later batch never rewrites them (retroactive effects of a
     * bench/threshold refresh are refresh-audit territory). */
-  private def manifestOldAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "manifest_old90") {
-      val old = oldSliceDocs(s, dir)
-      val exact = old.select(col("doc_id"),
-          graft.functions.TextFunctions.contentFingerprint(col("text"))
-            .as("fingerprint"))
-        .join(fpStoreOldAsset(s, dir), "fingerprint")
-        .select(col("doc_id"),
-          (col("doc_id") =!= col("keeper")).cast("long").as("exact_dup"))
-      val near = dedupLabelsOldAsset(s, dir)
-        .where(col("doc_id") =!= col("cluster"))
-        .select(col("doc_id"), lit(1L).as("near_dup"))
-      val oldToks = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-        .where(manifestArrivalBlock =!= 9)
-      val cont = Curation.decontaminateAgainstGramStore(
-          oldToks.where(col("doc_id") % 53 =!= 0), benchGramsOldAsset(s, dir))
-        .select(col("doc_id"), col("contaminated").cast("long").as("contaminated"))
-      val lowq = TextAnalysis.lowQualityByStoredThresholds(
-        old, qualityThresholdsOldAsset(s, dir))
-      val nTok = oldToks.select(col("doc_id"),
-        size(col("tokens")).cast("long").as("n_tokens"))
-      old.where(col("doc_id") % 53 =!= 0)
-        .select("doc_id", "source")
-        .join(exact, "doc_id")
-        .join(lowq.select("doc_id", "quality", "low_quality"), "doc_id")
-        .join(near, Seq("doc_id"), "left")
-        .join(cont, Seq("doc_id"), "left")
-        .join(nTok, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-          col("quality"), col("exact_dup"),
-          coalesce(col("near_dup"), lit(0L)).as("near_dup"),
-          coalesce(col("contaminated"), lit(0L)).as("contaminated"),
-          col("low_quality"))
-        .withColumn("kept",
-          (col("exact_dup") === 0 && col("near_dup") === 0 &&
-            col("contaminated") === 0 && col("low_quality") === 0).cast("long"))
-    }
+  private val manifestOldAsset = frameAsset("manifest_old90") { (s, dir) =>
+    val old = oldSliceDocs(s, dir)
+    val exact = old.select(col("doc_id"),
+        graft.functions.TextFunctions.contentFingerprint(col("text"))
+          .as("fingerprint"))
+      .join(fpStoreOldAsset(s, dir), "fingerprint")
+      .select(col("doc_id"),
+        (col("doc_id") =!= col("keeper")).cast("long").as("exact_dup"))
+    val near = dedupLabelsOldAsset(s, dir)
+      .where(col("doc_id") =!= col("cluster"))
+      .select(col("doc_id"), lit(1L).as("near_dup"))
+    val oldToks = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+      .where(manifestArrivalBlock =!= 9)
+    val cont = Curation.decontaminateAgainstGramStore(
+        oldToks.where(col("doc_id") % 53 =!= 0), benchGramsOldAsset(s, dir))
+      .select(col("doc_id"), col("contaminated").cast("long").as("contaminated"))
+    val lowq = TextAnalysis.lowQualityByStoredThresholds(
+      old, qualityThresholdsOldAsset(s, dir))
+    val nTok = oldToks.select(col("doc_id"),
+      size(col("tokens")).cast("long").as("n_tokens"))
+    old.where(col("doc_id") % 53 =!= 0)
+      .select("doc_id", "source")
+      .join(exact, "doc_id")
+      .join(lowq.select("doc_id", "quality", "low_quality"), "doc_id")
+      .join(near, Seq("doc_id"), "left")
+      .join(cont, Seq("doc_id"), "left")
+      .join(nTok, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"),
+        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+        col("quality"), col("exact_dup"),
+        coalesce(col("near_dup"), lit(0L)).as("near_dup"),
+        coalesce(col("contaminated"), lit(0L)).as("contaminated"),
+        col("low_quality"))
+      .withColumn("kept",
+        (col("exact_dup") === 0 && col("near_dup") === 0 &&
+          col("contaminated") === 0 && col("low_quality") === 0).cast("long"))
+  }
 
   /** The batch's manifest rows MATERIALIZED — what the incremental
     * protocol actually writes after scoring an append (stored old rows
@@ -797,8 +749,8 @@ object SparkEntry {
     * inlining the whole O(batch) scoring chain per report. The live
     * scoring chain itself stays registered (and priced) as the
     * `manifest_incremental` query. */
-  private def manifestBatchAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "manifest_batch90") { manifestIncrementalFrame(s, dir) }
+  private val manifestBatchAsset =
+    frameAsset("manifest_batch90") { (s, dir) => manifestIncrementalFrame(s, dir) }
 
   /** The append batch's manifest rows under the snapshot protocol —
     * every curation stage's flag at O(batch) off the stored indexes
@@ -991,7 +943,7 @@ object SparkEntry {
     }
     stage("base_index", exactSubstrWindowsAsset(s, dir),
         exactSubstrOldWindowsAsset(s, dir))
-      .unionByName(stage("cascade_l24", exactSubstrLevelAsset(s, dir, 24),
+      .unionByName(stage("cascade_l24", exactSubstrL24Asset(s, dir),
         exactSubstrOldL24Asset(s, dir)))
   }
 
@@ -999,12 +951,11 @@ object SparkEntry {
     * — "the served retrieval index before the batch arrived": the stored
     * snapshot the BM25 refresh-impact audit probes, built by the same
     * spelling as the live index so row payloads are comparable. */
-  private def bm25ScoresOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "bm25_scores_old90") {
-      val tcOld = termCountsAsset(s, dir).where(col("doc_id") % 10 =!= 9)
-      Tfidf.bm25FromCounts(tcOld,
-        Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9).count())
-    }
+  private val bm25ScoresOld90Asset = frameAsset("bm25_scores_old90") { (s, dir) =>
+    val tcOld = termCountsAsset(s, dir).where(col("doc_id") % 10 =!= 9)
+    Tfidf.bm25FromCounts(tcOld,
+      Tables.documents(s, dir).where(col("doc_id") % 10 =!= 9).count())
+  }
 
   /** Refresh-impact audit for the BM25 SERVED POSTINGS — what an append
     * batch does to a retrieval index that serves precomputed scores.
@@ -1048,24 +999,22 @@ object SparkEntry {
     * arrived": same hyperparameters and deterministic training as the
     * live `ivf_lloyd_cents` asset, so the audit probes a store the
     * serving index could actually have shipped. */
-  private def ivfCentsOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "ivf_cents_old90") {
-      Similarity.trainCentroidsFromEmbeddings(
-        Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 9),
-        nCentroids = 16, lloydIters = 1)
-    }
+  private val ivfCentsOld90Asset = frameAsset("ivf_cents_old90") { (s, dir) =>
+    Similarity.trainCentroidsFromEmbeddings(
+      Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 9),
+      nCentroids = 16, lloydIters = 1)
+  }
 
   /** Per-cell vector counts of the stored old-slice IVF index
     * `(list_id, n_vecs)` — the snapshot's inverted-list sizes, stored at
     * build time so the imbalance audit reads 16 rows instead of
     * re-assigning the old corpus. */
-  private def ivfCellSizesOld90Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "ivf_cell_sizes_old90") {
-      Similarity.listAssignments(
-          Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 9),
-          ivfCentsOld90Asset(s, dir))
-        .groupBy("list_id").agg(count(lit(1)).as("n_vecs"))
-    }
+  private val ivfCellSizesOld90Asset = frameAsset("ivf_cell_sizes_old90") { (s, dir) =>
+    Similarity.listAssignments(
+        Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 9),
+        ivfCentsOld90Asset(s, dir))
+      .groupBy("list_id").agg(count(lit(1)).as("n_vecs"))
+  }
 
   /** Refresh-impact audit for the ANN (IVF) index stores — does an
     * append batch leave the frozen coarse quantizer serviceable?
@@ -1108,11 +1057,10 @@ object SparkEntry {
     * whole span-dedup family (detect/stats/strip, exact + hashed) marks
     * back against; as an asset the corpus tokenizes + windows ONCE per
     * (session, dir) instead of once per query. */
-  private def spanWindowsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "span_windows") {
-      operators.Curation.windowRowsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 5)
-    }
+  private val spanWindowsAsset = frameAsset("span_windows") { (s, dir) =>
+    operators.Curation.windowRowsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 5)
+  }
 
   /** Verified exact-substring duplicated windows at L=12 — the
     * candidate-verify pipeline's output as a stored corpus asset
@@ -1121,34 +1069,31 @@ object SparkEntry {
     * query, exactly like the n=5 span-window asset. The rank gate keeps
     * only its verify SIDE from here; its suffix-rank construction
     * rebuilds per run by design (algorithm independence is the gate). */
-  private def exactSubstrWindowsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_windows_l12") {
-      ExactSubstr.duplicateWindowsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 12)
-    }
+  private val exactSubstrWindowsAsset = frameAsset("exact_substr_windows_l12") { (s, dir) =>
+    ExactSubstr.duplicateWindowsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 12)
+  }
 
   /** The FULL window-hash index (every position, duplicated or not) —
     * the narrow mergeable sibling the incremental merge consumes: new
     * documents can flip previously-UNIQUE old windows to duplicated, and
     * uniqueness is exactly what the verified index doesn't store. One
     * kernel pass, 24-byte rows. */
-  private def exactSubstrHashesAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_hashes_l12") {
-      ExactSubstr.windowHashesFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 12)
-    }
+  private val exactSubstrHashesAsset = frameAsset("exact_substr_hashes_l12") { (s, dir) =>
+    ExactSubstr.windowHashesFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)), 12)
+  }
 
   /** The verified index over the PRE-APPEND corpus slice (doc_id % 10 ≠ 9
     * — the replay's "stored index before the batch arrived"): a
     * deterministic per-dataset derivation like every other index asset,
     * so the registered incremental-merge query is SERVING-shaped (merge +
     * spans), not a rebuild-per-execution. */
-  private def exactSubstrOldWindowsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_windows_old90") {
-      ExactSubstr.duplicateWindowsFromTokens(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-          .where(col("doc_id") % 10 =!= 9), 12)
-    }
+  private val exactSubstrOldWindowsAsset = frameAsset("exact_substr_windows_old90") { (s, dir) =>
+    ExactSubstr.duplicateWindowsFromTokens(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+        .where(col("doc_id") % 10 =!= 9), 12)
+  }
 
   /** Cascade-level marked sets (doc_id, pos) at L = 24/48/96 as sub-assets
     * beside the base index: each level derives from the PREVIOUS level's
@@ -1159,40 +1104,40 @@ object SparkEntry {
     * depth-profile / match-length consumers are SERVING-only — the r8
     * profile re-ran the whole cascade per execution and compiled a
     * 953-exchange plan. */
-  private def exactSubstrLevelAsset(s: SparkSession, dir: String,
-      level: Int): DataFrame =
-    corpusAsset(s, dir, s"exact_substr_marks_l$level") {
-      val prev =
-        if (level == 24) exactSubstrWindowsAsset(s, dir).select("doc_id", "pos")
-        else exactSubstrLevelAsset(s, dir, level / 2)
+  private def exactSubstrLevelAsset(level: Int)(
+      prev: (SparkSession, String) => DataFrame): Asset[DataFrame] =
+    frameAsset(s"exact_substr_marks_l$level") { (s, dir) =>
       val toks = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
       // store the level hash beside each mark (r9: the probe key
       // incremental cascade maintenance needs — one extra kernel pass
       // over marked docs at build time)
       ExactSubstr.withLevelHashes(toks,
-        ExactSubstr.cascadeStep(toks, prev, level / 2), level)
+        ExactSubstr.cascadeStep(toks, prev(s, dir), level / 2), level)
     }
+  private val exactSubstrL24Asset =
+    exactSubstrLevelAsset(24)(exactSubstrWindowsAsset(_, _).select("doc_id", "pos"))
+  private val exactSubstrL48Asset = exactSubstrLevelAsset(48)(exactSubstrL24Asset)
+  private val exactSubstrL96Asset = exactSubstrLevelAsset(96)(exactSubstrL48Asset)
 
   /** The l24 cascade level over the PRE-APPEND corpus slice — the stored
     * level the cascade-merge replay updates (the level sibling of
     * `exact_substr_windows_old90`), hashes attached like every stored
     * level. */
-  private def exactSubstrOldL24Asset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_marks_old90_l24") {
-      val toks = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
-        .where(col("doc_id") % 10 =!= 9)
-      ExactSubstr.withLevelHashes(toks,
-        ExactSubstr.cascadeStep(toks,
-          exactSubstrOldWindowsAsset(s, dir).select("doc_id", "pos"), 12), 24)
-    }
+  private val exactSubstrOldL24Asset = frameAsset("exact_substr_marks_old90_l24") { (s, dir) =>
+    val toks = operators.Scaling.fanOut(tokenArraysAsset(s, dir))
+      .where(col("doc_id") % 10 =!= 9)
+    ExactSubstr.withLevelHashes(toks,
+      ExactSubstr.cascadeStep(toks,
+        exactSubstrOldWindowsAsset(s, dir).select("doc_id", "pos"), 12), 24)
+  }
 
   /** All four stored cascade levels, base first — the input shape the
     * profile and match-length servers consume. */
   private def exactSubstrLevels(s: SparkSession, dir: String): Seq[(Int, DataFrame)] =
     Seq(12 -> exactSubstrWindowsAsset(s, dir).select("doc_id", "pos"),
-      24 -> exactSubstrLevelAsset(s, dir, 24),
-      48 -> exactSubstrLevelAsset(s, dir, 48),
-      96 -> exactSubstrLevelAsset(s, dir, 96))
+      24 -> exactSubstrL24Asset(s, dir),
+      48 -> exactSubstrL48Asset(s, dir),
+      96 -> exactSubstrL96Asset(s, dir))
 
   /** Exact per-position longest-match lengths as a stored asset: the
     * band-bounded binary search between adjacent cascade levels is a
@@ -1200,45 +1145,37 @@ object SparkEntry {
     * derivation work, not per-query serving work, exactly like the
     * cascade levels themselves. Length-weighted policies and the
     * registered query read the parquet. */
-  private def matchLengthsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_match_lengths") {
-      ExactSubstr.matchLengthsFromLevels(
-        operators.Scaling.fanOut(tokenArraysAsset(s, dir)),
-        exactSubstrLevels(s, dir))
-    }
+  private val matchLengthsAsset = frameAsset("exact_substr_match_lengths") { (s, dir) =>
+    ExactSubstr.matchLengthsFromLevels(
+      operators.Scaling.fanOut(tokenArraysAsset(s, dir)),
+      exactSubstrLevels(s, dir))
+  }
 
   /** Duplication-depth profile as a stored 4-row asset: one bounded
     * aggregate over each cascade level at BUILD time; serving reads the
     * tiny parquet (a 100 TB corpus summary must not be recomputed from
     * the full marked sets per query). */
-  private def depthProfileAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "exact_substr_depth_profile") {
-      ExactSubstr.dupLengthProfileFromLevels(exactSubstrLevels(s, dir))
-    }
+  private val depthProfileAsset = frameAsset("exact_substr_depth_profile") { (s, dir) =>
+    ExactSubstr.dupLengthProfileFromLevels(exactSubstrLevels(s, dir))
+  }
 
   /** Bloom over the verified dup-window hashes — the streaming gate's
     * trained model blob, built once per (session, dataset) from the
     * stored index like the other model artifacts (PQ codebooks, BPE
     * rules, decon Blooms). */
-  private val dupBloomCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Byte]]()
-  private def dupWindowBloomModel(s: SparkSession, dir: String): Array[Byte] = {
-    pruneStopped(dupBloomCache, (k: (SparkSession, String)) => k._1)
-    dupBloomCache.getOrElseUpdate((s, dir),
-      graft.streaming.Streams.dupWindowBloom(exactSubstrWindowsAsset(s, dir), 12))
-  }
+  private val dupWindowBloomModel = new Asset[Array[Byte]]("dup_window_bloom", (s, dir) =>
+    graft.streaming.Streams.dupWindowBloom(exactSubstrWindowsAsset(s, dir), 12))
 
   /** External benchmark-embedding table — the eval suite as its OWN
     * parquet source (the shape a real pipeline reads: benchmarks live in
     * their own store, not as a predicate over the corpus). Content is the
     * capped benchmark split the decontamination family gates against, so
     * `decontaminate_semantic_external` shares the split form's oracle. */
-  private def benchmarkEmbeddingsAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "benchmark_embeddings") {
-      Tables.embeddings(s, dir)
-        .where(col("vec_id") % 53 === 0 && col("vec_id") < 5000)
-        .select("vec_id", "embedding")
-    }
+  private val benchmarkEmbeddingsAsset = frameAsset("benchmark_embeddings") { (s, dir) =>
+    Tables.embeddings(s, dir)
+      .where(col("vec_id") % 53 === 0 && col("vec_id") < 5000)
+      .select("vec_id", "embedding")
+  }
 
   /** The end-to-end curation manifest (shared by `training_data_manifest`
     * and `manifest_quality_calibration`): per train-split document, audit
@@ -1300,80 +1237,15 @@ object SparkEntry {
     * registry (r5: 15.4 s cold, shared by two queries). Built ONCE per
     * (session, dataset) like every other shared intermediate; consumers
     * re-sort after the parquet read (row order is not an asset property). */
-  private def manifestAsset(s: SparkSession, dir: String): DataFrame =
-    corpusAsset(s, dir, "manifest") { manifestFrame(s, dir) }
+  private val manifestAsset = frameAsset("manifest") { (s, dir) => manifestFrame(s, dir) }
 
-  /** Every shared corpus asset / trained index, in dependency order, with
-    * the name its parquet directory carries. The bench harness forces each
-    * build ONCE up front and times it under a separate `assets` key, so
-    * per-query timings are SERVING-ONLY (r6: `bigram_pmi`'s 45 s cold was
-    * the token-array + bigram-counts builds landing on whichever query ran
-    * first, masking real serving regressions). Forcing an accessor twice
-    * is idempotent — the second call returns the cached frame — so a
-    * pre-built entry times at ~0 s and the map stays honest about where
-    * build cost actually landed. */
-  private[graft] def assetBuilders: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "token_arrays" -> ((s, d) => { tokenArraysAsset(s, d); () }),
-    "term_counts" -> ((s, d) => { termCountsAsset(s, d); () }),
-    "docs_count" -> ((s, d) => { docsCount(s, d); () }),
-    "ngram_pairs" -> ((s, d) => { exactPairsAsset(s, d); () }),
-    "dedup_labels" -> ((s, d) => { dedupLabelsAsset(s, d); () }),
-    "minhash_pairs" -> ((s, d) => { minhashPairsAsset(s, d); () }),
-    "simhash_pairs" -> ((s, d) => { simhashPairsAsset(s, d); () }),
-    "bpe_merges" -> ((s, d) => { bpeMergesAsset(s, d); () }),
-    "quality_classifier_weights" -> ((s, d) => { qualityClassifierWeightsAsset(s, d); () }),
-    "bm25_scores" -> ((s, d) => { bm25Asset(s, d); () }),
-    "bm25_served_postings" -> ((s, d) => { bm25ServedPostings(s, d); () }),
-    "bm25_scores_old90" -> ((s, d) => { bm25ScoresOld90Asset(s, d); () }),
-    "kn3_model_audit_old" -> ((s, d) => { kn3ModelAuditOldAsset(s, d); () }),
-    "kn2_model_audit_old" -> ((s, d) => { kn2ModelAuditOldAsset(s, d); () }),
-    "ivf_cents_old90" -> ((s, d) => { ivfCentsOld90Asset(s, d); () }),
-    "ivf_cell_sizes_old90" -> ((s, d) => { ivfCellSizesOld90Asset(s, d); () }),
-    "knn_exact" -> ((s, d) => { knnExactAsset(s, d); () }),
-    "ivf_lloyd_cents" -> ((s, d) => { lloydCentroidsAsset(s, d); () }),
-    "bigram_counts" -> ((s, d) => { bigramCountsAsset(s, d); () }),
-    "trigram_counts" -> ((s, d) => { trigramCountsAsset(s, d); () }),
-    "kn2_model" -> ((s, d) => { kn2ModelAsset(s, d); () }),
-    "kn3_model" -> ((s, d) => { kn3ModelAsset(s, d); () }),
-    "contrast_scores" -> ((s, d) => { contrastScoresAsset(s, d); () }),
-    "trigram_counts_old90" -> ((s, d) => { trigramCountsOld90Asset(s, d); () }),
-    "bigram_counts_old90" -> ((s, d) => { bigramCountsOld90Asset(s, d); () }),
-    "trigram_counts_audit_old" -> ((s, d) => { trigramCountsAuditOldAsset(s, d); () }),
-    "bigram_counts_audit_old" -> ((s, d) => { bigramCountsAuditOldAsset(s, d); () }),
-    // stats BEFORE the scores snapshot: the scores builder serves from the
-    // stored stats, so builder order keeps each build's timing attributed
-    // to its own asset-phase entry
-    "kn3_stats_old90" -> ((s, d) => { kn3StatsOld90(s, d); () }),
-    "trigram_counts_in_old90" -> ((s, d) => { trigramCountsInOld90Asset(s, d); () }),
-    "kn3_stats_in_old90" -> ((s, d) => { kn3StatsInOld90(s, d); () }),
-    "unit_price_pairs" -> ((s, d) => { unitPricePairsAsset(s, d); () }),
-    "contrast_scores_old90" -> ((s, d) => { contrastScoresOld90Asset(s, d); () }),
-    "paragraph_keepers_old90" -> ((s, d) => { paragraphKeepersOldAsset(s, d); () }),
-    "paragraph_keepers_delim_old90" -> ((s, d) => { paragraphKeepersDelimOldAsset(s, d); () }),
-    "fp_store_old90" -> ((s, d) => { fpStoreOldAsset(s, d); () }),
-    "dedup_gram_df_old90" -> ((s, d) => { dedupGramDfOldAsset(s, d); () }),
-    "dedup_postings_old90" -> ((s, d) => { dedupPostingsOldAsset(s, d); () }),
-    "dedup_sizes_old90" -> ((s, d) => { dedupSizesOldAsset(s, d); () }),
-    "dedup_labels_old90" -> ((s, d) => { dedupLabelsOldAsset(s, d); () }),
-    "bench_grams_old90" -> ((s, d) => { benchGramsOldAsset(s, d); () }),
-    "quality_thresholds_old90" -> ((s, d) => { qualityThresholdsOldAsset(s, d); () }),
-    "manifest_old90" -> ((s, d) => { manifestOldAsset(s, d); () }),
-    "conservative_weights" -> ((s, d) => { conservativeWeightsAsset(s, d); () }),
-    "manifest_batch90" -> ((s, d) => { manifestBatchAsset(s, d); () }),
-    "span_windows" -> ((s, d) => { spanWindowsAsset(s, d); () }),
-    "benchmark_embeddings" -> ((s, d) => { benchmarkEmbeddingsAsset(s, d); () }),
-    "exact_substr_windows_l12" -> ((s, d) => { exactSubstrWindowsAsset(s, d); () }),
-    "exact_substr_hashes_l12" -> ((s, d) => { exactSubstrHashesAsset(s, d); () }),
-    "exact_substr_windows_old90" -> ((s, d) => { exactSubstrOldWindowsAsset(s, d); () }),
-    "exact_substr_marks_old90_l24" -> ((s, d) => { exactSubstrOldL24Asset(s, d); () }),
-    "exact_substr_marks_l24" -> ((s, d) => { exactSubstrLevelAsset(s, d, 24); () }),
-    "exact_substr_marks_l48" -> ((s, d) => { exactSubstrLevelAsset(s, d, 48); () }),
-    "exact_substr_marks_l96" -> ((s, d) => { exactSubstrLevelAsset(s, d, 96); () }),
-    "exact_substr_match_lengths" -> ((s, d) => { matchLengthsAsset(s, d); () }),
-    "exact_substr_depth_profile" -> ((s, d) => { depthProfileAsset(s, d); () }),
-    "dup_window_bloom" -> ((s, d) => { dupWindowBloomModel(s, d); () }),
-    "manifest" -> ((s, d) => { manifestAsset(s, d); () }),
-    "ann_index" -> ((s, d) => { annIndex(s, d); () }))
+  /** One trained ANN index per dataset (build-once/query-many): every
+    * PQ/IVF query and recall gate reads the same stored index tables
+    * instead of paying the deterministic training again. */
+  private val annIndex = storedAsset("ann_index") { (s, dir, path) =>
+    operators.ProductQuantization.writeIndex(
+      operators.ProductQuantization.buildIndex(Tables.embeddings(s, dir)), path)
+  }(operators.ProductQuantization.loadIndex)
 
   // ---------------------------------------------------------------------------
   // Declared queries. Each (SparkSession, sfDir) => DataFrame, hash-compared
@@ -2534,7 +2406,7 @@ object SparkEntry {
     // witness flattened — pins the LEVEL assets (which three strip/profile
     // consumers serve from) against a direct duplicated-24-gram oracle
     "exact_substr_level_marks" -> ((s, dir) =>
-      exactSubstrLevelAsset(s, dir, 24)
+      exactSubstrL24Asset(s, dir)
         .select(col("doc_id"), col("pos"), col("occ"),
           col("canon").getField("doc_id").as("canon_doc"),
           col("canon").getField("pos").as("canon_pos"))
@@ -2572,7 +2444,7 @@ object SparkEntry {
     "exact_substr_strip_minlen" -> ((s, dir) =>
       ExactSubstr.stripThresholdFromLevel(
         operators.Scaling.fanOut(tokenArraysAsset(s, dir)),
-        exactSubstrLevelAsset(s, dir, 48), 48)),
+        exactSubstrL48Asset(s, dir), 48)),
     // KEEP-LONGEST strip (the other §4 keeper variant): each duplicated
     // gram keeps its occurrence in the longest document (ties →
     // corpus-first); keeper election groups by the 16-byte stored canon,

@@ -61,26 +61,8 @@ object ExactSubstr {
     * (`monotonically_increasing_id`) against recomputation under a
     * different partition layout. */
   private def pin(df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
     val p = df.scopedPersist()
     p.count()
-    if (sys.env.contains("GRAFT_PIN_PROFILE"))
-      println(String.format(java.util.Locale.ROOT, "[pin] %6.2f s  %s",
-        Double.box((System.nanoTime() - t0) / 1e9), df.columns.mkString(",")))
-    df.sparkSession.createDataFrame(p.rdd, p.schema)
-  }
-
-  /** [[pin]] without the synchronous materialize: persist + LINEAGE-CUT
-    * only. `p.rdd` compiles the physical plan but runs NO job, so the
-    * wrapped frame keeps the tiny `LogicalRDD` plan (every action renders
-    * the plan string for the SQL listener — an un-cut merge level OOMed a
-    * 4 GiB heap on plan TEXT alone) while the cache is populated by
-    * whichever downstream job touches it first, instead of a dedicated
-    * count barrier. DETERMINISTIC frames only: concurrent first readers
-    * may compute a partition twice, so a nondeterministic id would fork —
-    * every frame in the merge family is content-derived. */
-  private def lazyPin(df: DataFrame): DataFrame = {
-    val p = df.scopedPersist()
     df.sparkSession.createDataFrame(p.rdd, p.schema)
   }
 
@@ -183,12 +165,12 @@ object ExactSubstr {
     val dupWh = u.groupBy("wh").agg(count(lit(1)).as("c")).where(col("c") >= 2)
     // distinct: a caller whose old/new doc sets overlap must not count a
     // position's gram twice in the verify
-    // lazyPin (the r11 barrier diet): lineage still cut, but the cache is
+    // lazyPinned (the r11 barrier diet): lineage still cut, but the cache is
     // populated by the first downstream job instead of a dedicated count
     // barrier — the merge path is deterministic, so compute-once needs
     // only the persist
-    val candPos = lazyPin(u.join(dupWh.select("wh"), "wh")
-      .select("doc_id", "pos").distinct())
+    val candPos = u.join(dupWh.select("wh"), "wh")
+      .select("doc_id", "pos").distinct().lazyPinned()
     val candDocs = broadcast(candPos.select("doc_id").distinct())
     // ONE semi-join over the union frame (the r12 merge diet — this was
     // two per-side semi-joins, i.e. two broadcast probe operators and a
@@ -197,7 +179,7 @@ object ExactSubstr {
     val toksCand = oldToks.select("doc_id", "tokens")
       .unionByName(newToks.select("doc_id", "tokens"))
       .join(candDocs, Seq("doc_id"), "left_semi")
-    val verifiedCand = lazyPin(verifyCandidates(toksCand, candPos, n))
+    val verifiedCand = verifyCandidates(toksCand, candPos, n).lazyPinned()
     oldVerified
       .join(verifiedCand.select("doc_id", "pos"), Seq("doc_id", "pos"), "left_anti")
       .unionByName(verifiedCand)
@@ -264,17 +246,17 @@ object ExactSubstr {
     // referenced once (straight into the hash pass) — no pin needed
     val enabled = closure.join(changedAdj, Seq("doc_id", "pos"), "left_semi")
     // level hashes for enabled positions only (content read: enabled docs).
-    // lazyPin (the r11 barrier diet, like the base merge): every frame
+    // lazyPinned (the r11 barrier diet, like the base merge): every frame
     // below is referenced 2-3 times but deterministic, so the persist
     // alone guarantees compute-once — the count barriers were ~40% of the
     // level's wall time — while the lineage cut keeps plan text flat (the
     // first un-cut attempt OOMed the spec heap rendering the plan string).
-    val enabledH = lazyPin(withLevelHashes(unionToks, enabled, level))
+    val enabledH = withLevelHashes(unionToks, enabled, level).lazyPinned()
     // stored occurrences of touched (or hash-colliding) grams
-    val storedHit = lazyPin(storedLevel.join(
-      broadcast(enabledH.select("wh").distinct()), "wh"))
-    val candPos = lazyPin(enabledH.select("doc_id", "pos")
-      .unionByName(storedHit.select("doc_id", "pos")).distinct())
+    val storedHit = storedLevel.join(
+      broadcast(enabledH.select("wh").distinct()), "wh").lazyPinned()
+    val candPos = enabledH.select("doc_id", "pos")
+      .unionByName(storedHit.select("doc_id", "pos")).distinct().lazyPinned()
     val candDocs = broadcast(candPos.select("doc_id").distinct())
     val verified = verifyCandidates(
       unionToks.join(candDocs, Seq("doc_id"), "left_semi"), candPos, level)
@@ -306,8 +288,8 @@ object ExactSubstr {
       newToks: DataFrame, baseLen: Int): Seq[(Int, DataFrame)] = {
     val unionToks = oldToks.select("doc_id", "tokens")
       .unionByName(newToks.select("doc_id", "tokens"))
-    val mergedBase = lazyPin(
-      mergeVerifiedIncremental(oldToks, oldHashes, oldVerified, newToks, baseLen))
+    val mergedBase =
+      mergeVerifiedIncremental(oldToks, oldHashes, oldVerified, newToks, baseLen).lazyPinned()
     (baseLen, mergedBase) +:
       mergeLevelsIncremental(unionToks, mergedBase, oldVerified, storedLevels,
         baseLen)
@@ -324,10 +306,10 @@ object ExactSubstr {
   def mergeLevelsIncremental(unionToks: DataFrame, mergedBase: DataFrame,
       oldVerified: DataFrame, storedLevels: Seq[(Int, DataFrame)],
       baseLen: Int): Seq[(Int, DataFrame)] = {
-    // changed sets lazyPin (referenced twice inside the next level's
+    // changed sets lazyPinned (referenced twice inside the next level's
     // adjacency union — deterministic, persist + lineage cut is enough)
     def changedVs(merged: DataFrame, stored: DataFrame): DataFrame =
-      lazyPin(changedMarks(merged, stored))
+      changedMarks(merged, stored).lazyPinned()
     val out = Seq.newBuilder[(Int, DataFrame)]
     var mergedHalf = mergedBase.select("doc_id", "pos")
     var changedHalf = changedVs(mergedBase, oldVerified)
@@ -335,12 +317,12 @@ object ExactSubstr {
     for ((level, stored) <- storedLevels) {
       require(level == 2 * halfLen,
         s"stored levels must double: got $level after $halfLen")
-      // every level lazyPins: the NEXT level's half-closure self-joins
+      // every level lazyPinned: the NEXT level's half-closure self-joins
       // this frame (lineage cut mandatory), but the materialize barrier
       // is not — the next level's first job (or the caller's action)
       // populates the cache
-      val merged = lazyPin(
-        mergeLevelIncremental(unionToks, stored, mergedHalf, changedHalf, level))
+      val merged =
+        mergeLevelIncremental(unionToks, stored, mergedHalf, changedHalf, level).lazyPinned()
       // the changed set only feeds the NEXT doubling — skip it on the last
       if (storedLevels.last._1 != level) changedHalf = changedVs(merged, stored)
       mergedHalf = merged.select("doc_id", "pos")
@@ -664,18 +646,18 @@ object ExactSubstr {
     // the narrow (doc_id, pos) projection once instead of re-scanning
     // the level parquet per use
     val markedByLevel = levels.map { case (l, m) =>
-      (l, lazyPin(m.select("doc_id", "pos"))) }.toMap
+      (l, m.select("doc_id", "pos").lazyPinned()) }.toMap
     val base = markedByLevel(lens.head)
     val cap = lens.last
     // candidates only ever live in documents owning a base mark — restrict
     // the token-array side ONCE instead of rescanning the corpus per pass.
     // Every frame in this build is content-derived (deterministic), so the
-    // whole chain runs on lazyPin — persist + lineage cut WITHOUT the
+    // whole chain runs on lazyPinned — persist + lineage cut WITHOUT the
     // dedicated count barrier (the r11 merge diet): each round's one real
     // action (the mids collect) materializes that round's probe + state
     // caches as a side effect, halving the per-round job count.
-    val toksDup = lazyPin(toks.select(col("doc_id"), col("tokens"))
-      .join(base.select("doc_id").distinct(), "doc_id"))
+    val toksDup = toks.select(col("doc_id"), col("tokens"))
+      .join(base.select("doc_id").distinct(), "doc_id").lazyPinned()
     // combinable-hash diet (r12): ONE prefix-hash kernel pass per
     // candidate-owning document, pinned for the whole build — every
     // probe round afterwards derives its window hashes per CANDIDATE in
@@ -691,14 +673,14 @@ object ExactSubstr {
     // level per round — the only per-round shuffle left is the (m, wh)
     // bucket test itself. The top level never hosts a probe (every mid
     // lies strictly inside a band), so only lens.init arrays ride along.
-    val toksPool = lazyPin(lens.init.foldLeft(
+    val toksPool = lens.init.foldLeft(
       toksDup.select(col("doc_id"),
         expr("graft_prefix_hashes(tokens)").as("pre"))) { (acc, l) =>
       acc.join(
         markedByLevel(l).groupBy("doc_id")
           .agg(sort_array(collect_list(col("pos"))).as(s"arr_$l")),
         Seq("doc_id"), "left")
-    })
+    }.lazyPinned()
     // top-level members are exactly the cap (their true length is >= cap);
     // every other position bisects its band [l, 2l)
     def restrict(df: DataFrame): DataFrame = restrictTo match {
@@ -719,7 +701,7 @@ object ExactSubstr {
       if (bands.isEmpty)
         base.limit(0).select(col("doc_id"), col("pos"),
           lit(0L).as("lo"), lit(0L).as("hi"))
-      else lazyPin(bands.reduce(_ unionByName _))
+      else bands.reduce(_ unionByName _).lazyPinned()
     var state = bands0
     // ONE action per round: the distinct-mids collect both drives the
     // probe lengths and IS the termination test (no mids = every band is
@@ -738,12 +720,12 @@ object ExactSubstr {
     // union never re-executes a probe)
     val hitRounds = scala.collection.mutable.ListBuffer[DataFrame]()
     while (mids.nonEmpty) {
-      val accepted = lazyPin(
-        probeHashAcceptsPinned(toksPool, lens, mids, probeHashBits))
+      val accepted =
+        probeHashAcceptsPinned(toksPool, lens, mids, probeHashBits).lazyPinned()
       hitRounds += accepted
       val verified = accepted.select("doc_id", "pos", "m")
         .withColumn("dup", lit(1L))
-      state = lazyPin(state
+      state = state
         .withColumn("m",
           when(col("hi") - col("lo") > 1, floor((col("lo") + col("hi")) / 2)))
         .join(verified, Seq("doc_id", "pos", "m"), "left")
@@ -751,7 +733,7 @@ object ExactSubstr {
           when(col("m").isNotNull && col("dup").isNotNull, col("m"))
             .otherwise(col("lo")).as("lo"),
           when(col("m").isNotNull && col("dup").isNull, col("m"))
-            .otherwise(col("hi")).as("hi")))
+            .otherwise(col("hi")).as("hi")).lazyPinned()
       mids = distinctMids(state)
     }
     // exact-string confirm: lo stayed at the band base ⇒ the level asset
@@ -773,19 +755,19 @@ object ExactSubstr {
           .join(claimBuckets.select("m", "wh").distinct(), Seq("m", "wh"))
           .select("doc_id", "pos", "m")
         val exactOk = verifyCandidatesVarLen(toksDup, mates)
-        // lazyPin: the isEmpty right below is the materializing action
+        // lazyPinned: the isEmpty right below is the materializing action
         // (the confirm's one string pass runs inside it), and the rare
         // redo path reads the populated cache
-        val failed = lazyPin(claims
+        val failed = claims
           .join(exactOk, Seq("doc_id", "pos", "m"), "left_anti")
-          .select("doc_id", "pos"))
+          .select("doc_id", "pos").lazyPinned()
         if (failed.isEmpty) state
         else {
           // collision victims: redo the whole band with literal string
           // probes (exact at any hash width); everyone else keeps the
           // confirmed hash-search result
           val redo = exactLengthSearch(toksDup, markedByLevel, lens,
-            lazyPin(bands0.join(failed, Seq("doc_id", "pos"))))
+            bands0.join(failed, Seq("doc_id", "pos")).lazyPinned())
           state.join(failed, Seq("doc_id", "pos"), "left_anti")
             .unionByName(redo)
         }

@@ -451,14 +451,6 @@ object TextAnalysis {
     // against termCounts output, so the two tokenizations MUST stay one
     bigramPmiFromArrays(docs.select(Curation.tokenArray.as("a")), tc, minCount, k)
 
-  /** [[bigramPmiFromCounts]] with the bigram side supplied as prebuilt
-    * token arrays `(doc_id, tokens)` — the shared token-array corpus asset
-    * — so NEITHER side of the PMI re-tokenizes the corpus (adjacency is
-    * per-row array slicing over the stored arrays). */
-  def bigramPmiFromTokens(toks: DataFrame, tc: DataFrame,
-      minCount: Long = 5L, k: Int = 100): DataFrame =
-    bigramPmiFromArrays(toks.select(col("tokens").as("a")), tc, minCount, k)
-
   /** Adjacent-pair extraction from a token-array column: one row per
     * (w1, w2) transition, `carry` columns preserved — per-row array
     * slicing, no window, no self-join. THE single spelling of the bigram

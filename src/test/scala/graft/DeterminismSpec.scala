@@ -97,37 +97,30 @@ class DeterminismSpec extends SparkSpec {
     }
   }
 
-  test("contentDigest: paranoid mode sees byte flips that stat-only cannot") {
+  test("contentDigest sees a head or tail byte flip that keeps size and mtime") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_digest").toFile
     val f = new java.io.File(tmp, "part-0000.parquet")
-    java.nio.file.Files.write(f.toPath, "hello world".getBytes("UTF-8"))
-    val mtime = f.lastModified
-    // paranoid is an explicit parameter (no shared mutable state): a
-    // concurrent digest can never observe a mixed mode
-    val statBefore = SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = false)
-    val paranoidBefore = SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = true)
-    // stable across repeated calls
-    assert(paranoidBefore == SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = true))
-    // same length, same forced mtime, different content — the documented
-    // hole in the stat-only fingerprint
-    java.nio.file.Files.write(f.toPath, "hellp world".getBytes("UTF-8"))
-    assert(f.setLastModified(mtime))
-    assert(SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = false) == statBefore,
-      "stat-only digest cannot see a size/mtime-preserving rewrite (by design)")
-    assert(SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = true) != paranoidBefore,
-      "paranoid digest must change when file heads change")
-    // TAIL coverage: flip only the last byte of a file larger than the
-    // 64 KiB head window — parquet rewrites show in the footer, and the
-    // head-only digest of old could not see this
-    val big = new java.io.File(tmp, "part-0001.parquet")
+    // larger than the 64 KiB head window, so the head and the tail are
+    // separate reads
     val payload = Array.tabulate(80 * 1024)(i => (i % 251).toByte)
-    java.nio.file.Files.write(big.toPath, payload)
-    val bigMtime = big.lastModified
-    val before = SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = true)
-    payload(payload.length - 1) = (payload(payload.length - 1) ^ 1).toByte
-    java.nio.file.Files.write(big.toPath, payload)
-    assert(big.setLastModified(bigMtime))
-    assert(SparkEntry.contentDigest(tmp.getAbsolutePath, paranoid = true) != before,
-      "paranoid digest must cover the tail window past the 64 KiB head")
+    java.nio.file.Files.write(f.toPath, payload)
+    val mtime = f.lastModified
+    val before = SparkEntry.contentDigest(tmp.getAbsolutePath)
+    // stable across repeated calls
+    assert(before == SparkEntry.contentDigest(tmp.getAbsolutePath))
+    // same length, same forced mtime, one flipped byte: a stat-only
+    // (path, size, mtime) fingerprint could not see either rewrite
+    def flipped(at: Int): String = {
+      val b = payload.clone()
+      b(at) = (b(at) ^ 1).toByte
+      java.nio.file.Files.write(f.toPath, b)
+      assert(f.setLastModified(mtime))
+      assert(f.length == payload.length)
+      SparkEntry.contentDigest(tmp.getAbsolutePath)
+    }
+    assert(flipped(0) != before, "digest must change when the file head changes")
+    // parquet rewrites show in the footer, past the head window
+    assert(flipped(payload.length - 1) != before,
+      "digest must cover the tail window past the 64 KiB head")
   }
 }
